@@ -292,7 +292,7 @@ object DupExec {
     val sb = new StringBuilder("{\n")
     var first = true
     names.foreach { name =>
-      // same isolation as Bench: caches leaking across queries would
+      // same isolation as Verify: caches leaking across queries would
       // turn later queries' leaves into InMemoryTableScans and mask an
       // inter-QE recompute (or attribute one query's persist to another)
       graft.ops.CachedStages.release(spark)

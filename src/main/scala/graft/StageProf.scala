@@ -12,15 +12,16 @@ import org.apache.spark.sql.SparkSession
   *
   * Not part of the driver contract; a dev lever like PlanAudit.
   *
-  * Run: tools/bench_fresh.sh-style jar invocation of
-  *   graft.StageProf <sfDir> <queryName> [reps]
+  * Run: sbt "runMain graft.StageProf <sfDir> <query> [reps]"
+  * (SPARK_GRAFT_CPUS overrides the core count, default all cores).
   */
 object StageProf {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val name = args.lift(1).getOrElse("q01_pricing_summary")
     val reps = args.lift(2).map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -29,14 +30,6 @@ object StageProf {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_PROF_PREAMBLE=tables replays Bench's untimed
-    // table warm-up before profiling — for bisecting harness-context
-    // differences between Bench timings and focused profiles
-    if (sys.env.get("SPARK_GRAFT_PROF_PREAMBLE").exists(_.contains("tables")))
-      graft.ops.Tables.all.foreach { t =>
-        try spark.read.parquet(s"$dir/$t.parquet").count()
-        catch { case e: Throwable => System.err.println(s"warmup $t: $e") }
-      }
     val stages =
       scala.collection.mutable.Buffer[(Int, String, Long, Long, Long,
         Long, Long, Long, Long, Int, Long)]()

@@ -24,7 +24,7 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // dev lever, mirroring Bench: SPARK_GRAFT_ONLY=q69_...,q86_... dumps
+    // dev lever: SPARK_GRAFT_ONLY=q69_...,q86_... dumps
     // (and lists oracle SQL for) a subset — used for targeted sf0.1
     // spot-checks of the iterative family. The driver never sets it.
     val only = sys.env.get("SPARK_GRAFT_ONLY")

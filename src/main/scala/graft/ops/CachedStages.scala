@@ -9,7 +9,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * unpersist its own stage — the caller has not run an action yet — and
   * Spark's CacheManager keeps SQL-cached plans registered until they are
   * explicitly unpersisted (the ContextCleaner never releases them just
-  * because the DataFrame became unreachable). Bench/Verify clear the
+  * because the DataFrame became unreachable). Verify/perfbench clear the
   * whole session cache between queries; a LIBRARY caller composing
   * several operators in one long-lived session instead calls
   * [[release]] after consuming each result, so cached stages do not

@@ -110,7 +110,7 @@ object Dedup {
     * when the DataFrame becomes unreachable — and a lazily returned
     * DataFrame offers no caller-visible unpersist point. The pinned state
     * is small (one row per distinct text); measurement harnesses must
-    * clear the session cache between passes (Bench does) so a later run
+    * clear the session cache between passes so a later run
     * of the same canonical plan re-executes the signature stage instead
     * of reading it back from cache.
     */
@@ -147,16 +147,15 @@ object Dedup {
       .transform(s => CachedStages.track(s.persist()))
 
     // (cid, band, h): one row per band; bucket key is (band, h).
-    // NOT persisted by default: each self-join side re-runs the
-    // 4-element posexplode over the persisted `sigs` cache — O(rows)
-    // array indexing, no shuffle or aggregate inside the duplicate
-    // (tools/dup_exec.py allowlist). The GRAFT_AB_PERSIST_BANDS lever
-    // measures the alternative (cache the 4x|contents| exploded rows);
-    // the measured sf0.1 A/B lives beside the allowlist entry.
-    val bands0 = sigs.select(col("cid"), posexplode(
+    // NOT persisted: each self-join side re-runs the 4-element
+    // posexplode over the persisted `sigs` cache — O(rows) array
+    // indexing, no shuffle or aggregate inside the duplicate
+    // (tools/dup_exec.py allowlist). Caching the 4x|contents| exploded
+    // rows instead measured a wash at sf0.1 (3 interleaved fresh-JVM
+    // runs each: 1.30-1.53 s persisted vs 1.35-1.49 s re-exploded), so
+    // it would pay 4x cache memory for no time win.
+    val bands = sigs.select(col("cid"), posexplode(
       array((0 until 4).map(k => col(s"mh$k")): _*)).as(Seq("band", "h")))
-    val bands = if (sys.env.contains("GRAFT_AB_PERSIST_BANDS"))
-      CachedStages.track(bands0.persist()) else bands0
 
     val cand = bands.as("a")
       .join(bands.as("b"),
@@ -516,9 +515,9 @@ object Dedup {
     * persist: the value table feeds banding + two expansion joins and is
     * small (one row per distinct fingerprint). As with nearDupPairs, the
     * cache entry stays in the session's CacheManager until explicitly
-    * cleared (ContextCleaner does not release SQL-cached plans); Bench
-    * clears the session cache between its warm-up and timed passes so
-    * timings measure the real pipeline.
+    * cleared (ContextCleaner does not release SQL-cached plans); timed
+    * harnesses clear the session cache between their warm-up and timed
+    * passes so timings measure the real pipeline.
     */
   def simhashNearDupPairs(corpus: DataFrame, bits: Int = 16,
       nBands: Int = 4, maxHamming: Int = 3): DataFrame = {

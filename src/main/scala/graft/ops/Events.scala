@@ -12,13 +12,13 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   *
   * Timestamp adaptivity: the `ts` column has shipped in two physical
   * shapes — parquet TIMESTAMP(NANOS) (readable only as a raw-nanos long
-  * via `spark.sql.legacy.parquet.nanosAsLong`, set in the Verify, Bench
-  * and SparkSpec session builders) and plain timestamp[us] (read as
-  * TIMESTAMP_NTZ). The reader branches on
+  * via `spark.sql.legacy.parquet.nanosAsLong`, set in the Verify,
+  * perfbench and SparkSpec session builders) and plain timestamp[us]
+  * (read as TIMESTAMP_NTZ). The reader branches on
   * the observed type and derives the same canonical columns either way,
   * so every downstream operator and its DuckDB oracle see identical
   * µs-precision time regardless of which shape the files carry. Session
-  * timezone is pinned UTC everywhere (Verify/Bench/SparkSpec), so
+  * timezone is pinned UTC everywhere (Verify/perfbench/SparkSpec), so
   * NTZ↔LTZ wall clocks agree.
   */
 object Events {

@@ -76,22 +76,6 @@ object Graph {
       .orderBy(col("rank_fp").desc, col("part_id").asc)
   }
 
-  /** q69 with the per-round rank join SHUFFLED instead of broadcast —
-    * the strategy a 1000-executor cluster needs once the rank table
-    * outgrows a broadcast (ScaleSpec plan-asserts the mode; Bench
-    * records its measured cost alongside q69's so the switch point is
-    * a known trade, not an assumption). Same answer by construction.
-    */
-  def copurchasePagerankShuffle(spark: SparkSession, dir: String,
-      iters: Int = 5): DataFrame = {
-    // same two-action persist rationale as [[copurchasePagerank]]
-    pagerank(CachedStages.track(
-        copurchaseEdges(orderParts(spark, dir)).persist()), iters,
-        broadcastRanks = false)
-      .select(col("id").as("part_id"), col("rank_fp"))
-      .orderBy(col("rank_fp").desc, col("part_id").asc)
-  }
-
   /** Graded q70: per-part triangle participation in the co-purchase
     * graph — how many closed item-item-item loops each part sits on
     * (the local-clustering numerator; in curation terms, a part inside
@@ -355,20 +339,6 @@ object Graph {
       .orderBy("part_id")
   }
 
-  /** q86 with the per-round label join SHUFFLED instead of broadcast —
-    * the q69/q120 escape hatch for LPA, whose label vector is exactly
-    * |nodes| rows every round and so outgrows a broadcast first among
-    * the iterative ops. Same answer by construction (the argmax is
-    * reduction-order-free).
-    */
-  def copurchaseCommunitiesShuffle(spark: SparkSession, dir: String,
-      iters: Int = 3): DataFrame = {
-    labelPropagation(copurchaseEdges(orderParts(spark, dir)), iters,
-        broadcastLabels = false)
-      .select(col("id").as("part_id"), col("community"))
-      .orderBy("part_id")
-  }
-
   /** Core synchronous LPA over a DIRECTED edge list that must already
     * contain both directions of every undirected edge (as the
     * co-purchase build does). Returns `(id, community)`.
@@ -473,27 +443,6 @@ object Graph {
     // node membership (a part only in single-part orders has no edges)
     // is enforced inside personalizedPagerank against its degree cache
     personalizedPagerank(edges, seeds, iters)
-      .select(col("id").as("part_id"), col("rank_fp"))
-      .orderBy(col("rank_fp").desc, col("part_id").asc)
-  }
-
-  /** q90 with the per-round rank join SHUFFLED instead of broadcast —
-    * q69/q120's documented escape hatch applied to the personalized
-    * walk. The sparse rank frame usually stays seed-neighborhood-sized,
-    * but on a well-connected 100 TB graph it approaches |nodes| within
-    * two rounds, and a broadcast build of it fails exactly like the
-    * global-rank case. Same answer by construction.
-    */
-  def seededPagerankShuffle(spark: SparkSession, dir: String,
-      iters: Int = 5): DataFrame = {
-    val li = orderParts(spark, dir)
-    // same persist rationale and A/B as [[seededPagerank]]
-    val edges = CachedStages.track(copurchaseEdges(li).persist())
-    val seeds = Tables(spark, dir, "orders")
-      .filter(col("o_orderpriority") === "1-URGENT")
-      .select(col("o_orderkey").as("k"))
-      .join(li, "k").select(col("p").as("id")).distinct()
-    personalizedPagerank(edges, seeds, iters, broadcastRanks = false)
       .select(col("id").as("part_id"), col("rank_fp"))
       .orderBy(col("rank_fp").desc, col("part_id").asc)
   }
@@ -803,29 +752,15 @@ object Graph {
     * q69/q86/q90 keep broadcast defaults: their measured broadcast
     * advantage is real (~2x locally), while HITS pays 6 score joins
     * per 3 iterations and gets no local win from broadcasting. The
-    * broadcast mode stays available ([[purchaseHitsBroadcast]]) and
-    * Bench times it as `variant_q120_broadcast_scores` so the trade
-    * remains measured, not assumed. Output is the top-`kTop` of each
-    * side via TakeOrdered, rank stamped over the bounded result.
+    * broadcast mode stays available through [[purchaseHitsOf]]'s
+    * `broadcastScores` (ScaleSpec plan-asserts both modes). Output is
+    * the top-`kTop` of each side via TakeOrdered, rank stamped over the
+    * bounded result.
     */
   def purchaseHits(spark: SparkSession, dir: String, iters: Int = 3,
       kTop: Int = 20): DataFrame =
     purchaseHitsOf(purchaseEdges(spark, dir), iters, kTop,
       broadcastScores = false)
-
-  /** q120 with the per-half-round score join BROADCAST instead of
-    * shuffled — the classical small-vector optimization, kept as the
-    * measured counter-mode of the graded shuffle default (see
-    * [[purchaseHits]] for the round-17 A/B that flipped the trade).
-    * ScaleSpec plan-asserts both modes; Bench records this one's cost
-    * alongside q120's so the switch point stays a known trade. Same
-    * answer by construction — the integer arithmetic is
-    * reduction-order-free.
-    */
-  def purchaseHitsBroadcast(spark: SparkSession, dir: String, iters: Int = 3,
-      kTop: Int = 20): DataFrame =
-    purchaseHitsOf(purchaseEdges(spark, dir), iters, kTop,
-      broadcastScores = true)
 
   /** The join+aggregate half of a HITS half-round: sum the score
     * vector over `joinKey`'s in-edges into `outKey` rows
@@ -854,8 +789,7 @@ object Graph {
     *    noise locally (focused floors: broadcast 4.3-4.7 s vs shuffle
     *    4.7-5.3 s; full-pass: shuffle 5.08 s vs broadcast 5.38 s at
     *    sf0.1/local[32]), so the graded default stays the mode that
-    *    survives 100 TB; this one stays measured as
-    *    `variant_q120_broadcast_scores`.
+    *    survives 100 TB.
     */
   private[ops] def hitsScoreJoin(oriented: DataFrame, scores: DataFrame,
       joinKey: String, outKey: String,

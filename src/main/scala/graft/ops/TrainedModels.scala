@@ -8,8 +8,8 @@ import org.apache.spark.sql.SparkSession
   * PQ) train it ONCE per session instead of once per query — the
   * VERDICT r15 #6 shared-stage ask.
   *
-  * Why a DRIVER-SIDE memo and not a persisted DataFrame: Bench and
-  * Verify deliberately clear every Spark cache between queries
+  * Why a DRIVER-SIDE memo and not a persisted DataFrame: Verify and
+  * perfbench deliberately clear every Spark cache between queries
   * (`CachedStages.release` + `clearCache` + RDD unpersist), so any
   * shared SQL-cached stage would be evicted before its second
   * consumer; and an unpersisted localCheckpoint is unrecoverable (its
@@ -39,15 +39,12 @@ import org.apache.spark.sql.SparkSession
   * pass no key and always train, because a DataFrame's identity is
   * not a safe cache key.
   *
-  * `enabled` is a test/bench lever (settable, and initialized false
-  * when SPARK_GRAFT_NO_MODEL_MEMO is set) so specs can A/B memoized
-  * vs fresh training in one session and Bench can measure the
-  * cold-train cost on demand.
+  * `enabled` is settable so specs can A/B memoized vs fresh training
+  * in one session.
   */
 object TrainedModels {
 
-  @volatile var enabled: Boolean =
-    !sys.env.contains("SPARK_GRAFT_NO_MODEL_MEMO")
+  @volatile var enabled: Boolean = true
 
   private val models = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession,

@@ -9,7 +9,7 @@ trait SparkSpec extends AnyFunSuite {
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
-    // match Verify/Bench: legacy TIMESTAMP(NANOS) parquet reads as raw
+    // match Verify: legacy TIMESTAMP(NANOS) parquet reads as raw
     // longs (the LongType branch of Events.withTimeColumns) instead of
     // failing at analysis; no-op on timestamp[us] fixtures
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")

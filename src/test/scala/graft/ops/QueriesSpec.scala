@@ -27,7 +27,7 @@ class QueriesSpec extends SparkSpec {
     test(s"$name executes at sf0.001") {
       val df = fn(spark, dir)
       val n = df.count()
-      // the Verify/Bench cleanup discipline: a query's persisted stages
+      // the Verify cleanup discipline: a query's persisted stages
       // must not outlive its test — a leftover cache whose logical plan
       // matches a LATER suite's subtree silently rewrites that suite's
       // asserted plan (q107's token counts shadowed q98's word-frequency

@@ -2,9 +2,10 @@
 """Gate the graft.DupExec duplicate-execution report (VERDICT r17 #1).
 
 Usage:
-    tools/bench_fresh.sh-style jar invocation of graft.DupExec writes
-    /tmp/graft_dup_exec.json (one entry per graded query: captured
-    QueryExecution count, error, flags); then:
+    sbt "runMain graft.DupExec <sfDir> /tmp/graft_dup_exec.json" writes
+    one entry per graded query (captured QueryExecution count, error,
+    flags); `run / fork := true` forks it with build.sbt's add-opens
+    javaOptions. Then:
 
     python3 tools/dup_exec.py /tmp/graft_dup_exec.json
 
@@ -36,9 +37,9 @@ ALLOWLIST = {
     # isnotnull over the cache — O(rows) array indexing, no shuffle or
     # aggregate inside the duplicate. Persisting the exploded rows
     # would cache 4x|contents| rows to save arithmetic.
-    # MEASURED (round-19, sf0.1, GRAFT_AB_PERSIST_BANDS lever in
+    # MEASURED (round-19, sf0.1, persisted vs unpersisted bands in
     # Dedup.contentPairCandidates, 3 interleaved fresh-JVM runs each,
-    # healthy box — cpu sentinel 0.39-0.43s): explode-per-side
+    # healthy box): explode-per-side
     # 1.345/1.437/1.49s vs persisted bands 1.30/1.332/1.53s — a wash
     # within the +-0.15s noise band; the persist pays 4x cache memory
     # for no time win even at bench scale, and at 100 TB the extra
